@@ -27,17 +27,11 @@ from core_telecoms_etl_spark.operators.cleaning import (
 )
 from core_telecoms_etl_spark.operators.dq import (
     DQResult,
-    check_accepted_values,
-    check_not_null,
-    check_unique,
     run_checks,
 )
 
 __all__ = [
     "DQResult",
-    "check_accepted_values",
-    "check_not_null",
-    "check_unique",
     "clean",
     "dedup_latest_by_key",
     "dedup_rows",

@@ -151,7 +151,6 @@ def clean(
     rename_map: Mapping[str, str] | None = None,
     *,
     dedup: bool = True,
-    guard: bool = False,
 ) -> DataFrame:
     """The reference's full cleaning chain (plugins/transform.py:85-114) as
     one lazy plan: normalize names → rename → trim → empty-string⇒NULL →
@@ -164,6 +163,4 @@ def clean(
     out = drop_all_null_rows(out)
     if dedup:
         out = dedup_rows(out)
-    if guard:
-        out = empty_guard(out)
     return out

@@ -18,7 +18,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -31,39 +31,6 @@ class DQResult:
     @property
     def passed(self) -> bool:
         return self.violations == 0
-
-
-def check_not_null(df: DataFrame, columns: Sequence[str]) -> list[DQResult]:
-    """NULL-count per column in ONE pass (vs one query per dbt test)."""
-    aggs = [
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(c) for c in columns
-    ]
-    row = df.agg(*aggs).collect()[0]
-    return [DQResult("not_null", c, int(row[c] or 0)) for c in columns]
-
-
-def check_unique(df: DataFrame, columns: Sequence[str]) -> list[DQResult]:
-    """Duplicate-key count per key (each key is one hash aggregate)."""
-    out = []
-    for c in columns:
-        dup = (
-            df.filter(F.col(c).isNotNull())
-            .groupBy(c)
-            .count()
-            .filter(F.col("count") > 1)
-            .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).alias("v"))
-            .collect()[0]["v"]
-        )
-        out.append(DQResult("unique", c, int(dup)))
-    return out
-
-
-def check_accepted_values(
-    df: DataFrame, column: str, values: Sequence[str]
-) -> list[DQResult]:
-    """dbt accepted_values analog (capability; no instance in the ref)."""
-    n = df.filter(~F.col(column).isin(list(values)) & F.col(column).isNotNull()).count()
-    return [DQResult("accepted_values", column, int(n))]
 
 
 def checks_df(
@@ -163,14 +130,6 @@ def run_checks(
     return [
         DQResult(r.check_name, r.column_name, int(r.violations)) for r in rows
     ]
-
-
-def violations_df(spark: SparkSession, results: Sequence[DQResult]) -> DataFrame:
-    """Materialize check results as a DataFrame (for the declared queries)."""
-    return spark.createDataFrame(
-        [(r.check, r.column, r.violations) for r in results],
-        "check_name string, column_name string, violations bigint",
-    )
 
 
 def profile_columns(

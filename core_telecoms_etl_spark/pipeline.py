@@ -8,8 +8,8 @@ What replaces what:
   got from sibling Airflow tasks and its 10-thread pool).
 - per-file pandas loops            → one multi-file DataFrame scan per
   source batch.
-- 3-layer skip logic               → one manifest anti-join
-  (sources/incremental.py).
+- 3-layer skip logic               → one set difference against the
+  manifest, read once per run (sources/incremental.py).
 - per-source rename maps
   (pipeline.py:49-99)              → `SourceConfig.rename_map` applied in
   the cleaning chain.
@@ -94,10 +94,12 @@ def _read(spark: SparkSession, src: SourceConfig, files: list[str]):
 
 
 def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineReport:
-    """Incrementally land every source: discover raw files, anti-join the
-    manifest, read all new files as one batch, clean (normalize + rename +
-    trim + empty⇒NULL + drop-all-null + dedup), and append to the staging
-    folder. Idempotent: a second run with no new files writes nothing."""
+    """Incrementally land every source: discover raw files, skip those
+    already in the manifest, read all new files as one batch, clean
+    (normalize + rename + trim + empty⇒NULL + drop-all-null + dedup), and
+    append to the staging folder. Idempotent: a second run with no new
+    files writes nothing. A failing source raises; sources landed before
+    it stay recorded, and its own files are offered again next run."""
     loader = IncrementalLoader(spark, config.manifest_path)
     loads: dict[str, LoadReport] = {}
     audits: dict[str, list] = {}

@@ -21,9 +21,13 @@ from core_telecoms_etl_spark.sources.readers import load_table
 registry = ModelRegistry()
 
 
-def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Build the full star schema for one scale factor and return every
-    model. Fresh registry per call so sf_dir binds cleanly."""
+def build_star(
+    spark: SparkSession, sf_dir: str
+) -> tuple[dict[str, DataFrame], ModelRegistry]:
+    """Build the full star schema for one scale factor and return
+    `(built, reg)`: every model by name, and the registry that declares
+    the models' DQ checks (`reg.run_dq(built)`). Fresh registry per call
+    so sf_dir binds cleanly."""
     reg = ModelRegistry()
 
     @reg.model("stg_customers")

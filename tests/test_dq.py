@@ -13,21 +13,21 @@ def _df(spark):
 
 
 def test_not_null_counts(spark):
-    res = dq.check_not_null(_df(spark), ["k", "v"])
+    res = dq.run_checks(_df(spark), not_null=["k", "v"])
     got = {r.column: r.violations for r in res}
     assert got == {"k": 1, "v": 1}
     assert not res[0].passed
 
 
 def test_unique_counts_excess_rows(spark):
-    res = dq.check_unique(_df(spark), ["k"])
-    assert res[0].violations == 1  # one excess duplicate of k=1
-    clean = dq.check_unique(_df(spark), ["v"])
-    assert clean[0].violations == 0  # NULLs don't count as duplicates
+    res = dq.run_checks(_df(spark), unique=["k", "v"])
+    got = {r.column: r.violations for r in res}
+    assert got["k"] == 1  # one excess duplicate of k=1
+    assert got["v"] == 0  # NULLs don't count as duplicates
 
 
 def test_accepted_values(spark):
-    res = dq.check_accepted_values(_df(spark), "v", ["a", "b"])
+    res = dq.run_checks(_df(spark), accepted_values={"v": ["a", "b"]})
     assert res[0].violations == 1  # 'd'; NULL is not a violation
 
 
@@ -38,8 +38,8 @@ def test_run_checks_combined(spark):
 
 def test_run_checks_single_action_all_check_types(spark):
     """The fused suite: not_null + accepted_values share one aggregate,
-    unique keys union into the same plan — results match the per-check
-    helpers exactly."""
+    unique keys union into the same plan — each count matches the
+    single-kind suites above."""
     df = _df(spark)
     res = dq.run_checks(
         df,

@@ -36,29 +36,30 @@ def test_incremental_folders_independent(spark, tmp_path):
     assert r.new_files == ["x.json"]  # same name, different folder
 
 
-def test_new_files_df_end_to_end_without_collect(spark, tmp_path):
-    """The DataFrame-primary path: a distributed candidate listing goes
-    discovery → anti-join → manifest commit with no driver materialization
-    of file names (only counts cross to the driver)."""
+def test_lookups_read_the_manifest_once(spark, tmp_path):
+    """A loader collects the manifest on its first lookup (one Spark
+    job) and answers every later lookup on the driver, including files
+    it recorded itself."""
+    IncrementalLoader(spark, str(tmp_path / "manifest")).record(
+        "f", ["a.csv"]
+    )
     loader = IncrementalLoader(spark, str(tmp_path / "manifest"))
+    sc = spark.sparkContext
+    group = f"lookups-{tmp_path.name}"
 
-    listing = spark.createDataFrame(
-        [(f"part-{i:05d}.parquet",) for i in range(500)], "file_name string"
-    )
-    new = loader.new_files_df("bulk", listing)
-    assert new.columns == ["folder_name", "file_name"]
-    assert new.count() == 500
-    loader.record_df(new)
+    def lookup(folder: str, files: list[str]) -> list[str]:
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            return loader.new_files(folder, files)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
 
-    # second discovery over the same listing: everything already recorded
-    assert loader.new_files_df("bulk", listing).count() == 0
-    # a fresh file shows up; recorded entries stay suppressed
-    more = listing.unionByName(
-        spark.createDataFrame([("part-99999.parquet",)], "file_name string")
-    )
-    again = loader.new_files_df("bulk", more)
-    assert [r.file_name for r in again.collect()] == ["part-99999.parquet"]
-    assert loader.manifest().count() == 500
+    assert lookup("f", ["a.csv", "b.csv"]) == ["b.csv"]
+    assert lookup("g", ["a.csv"]) == ["a.csv"]
+    loader.record("f", ["b.csv"])
+    assert lookup("f", ["a.csv", "b.csv", "c.csv"]) == ["c.csv"]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_manifest_schema(spark, tmp_path):
@@ -108,89 +109,25 @@ def test_streaming_incremental_checkpoint_skips_processed(spark, tmp_path):
     assert {r.id for r in spark.read.parquet(dest).collect()} == {1, 2, 3}
 
 
-def test_run_notification_hooks_and_retry(spark, tmp_path):
-    """The pipeline-level orchestration hooks (VERDICT r11 ask #7 — the
-    reference's email-on-success/failure + task-retry behavior,
-    airflow/dags/pipeline.py:20-43,110,240-264), kept OUT of the query
-    surface: a flaky `process` that fails once is retried, the manifest
-    is recorded only after the successful attempt, and the success
-    notification reports attempts=2."""
-    from core_telecoms_etl_spark.sources.incremental import RunNotification
-
-    loader = IncrementalLoader(spark, str(tmp_path / "manifest"))
-    events: list[RunNotification] = []
-    calls = {"n": 0}
-
-    def flaky(files: list[str]) -> None:
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("transient")
-
-    r = loader.run(
-        "f",
-        ["a.parquet"],
-        flaky,
-        retries=1,
-        on_success=events.append,
-        on_failure=events.append,
-    )
-    assert calls["n"] == 2  # failed once, retried once
-    assert [e.status for e in events] == ["success"]
-    n = events[0]
-    assert n.attempts == 2 and n.folder == "f" and n.error is None
-    assert n.report is r and r.new_files == ["a.parquet"]
-    # recorded exactly once despite the retry
-    assert loader.manifest().count() == 1
-
-
-def test_run_failure_notifies_then_raises_and_keeps_files_new(
-    spark, tmp_path
-):
-    """Exhausted retries: on_failure observes the error (it never
-    swallows it), the exception re-raises, the manifest records
-    NOTHING — so the same files are offered again on the next run
-    (the reference's retry-then-alert semantics, never data loss)."""
+def test_run_failure_propagates_and_keeps_files_new(spark, tmp_path):
+    """A failing `process` raises out of `run`, the manifest records
+    NOTHING, and the same files are offered again — by a fresh loader
+    and by the same one — so a scheduler that retries the run never
+    loses data."""
     import pytest
 
-    from core_telecoms_etl_spark.sources.incremental import RunNotification
-
     loader = IncrementalLoader(spark, str(tmp_path / "manifest"))
-    events: list[RunNotification] = []
 
     def boom(files: list[str]) -> None:
         raise ValueError("bad batch")
 
     with pytest.raises(ValueError, match="bad batch"):
-        loader.run(
-            "f",
-            ["a.parquet"],
-            boom,
-            retries=2,
-            on_success=events.append,
-            on_failure=events.append,
-        )
-    assert [e.status for e in events] == ["failure"]
-    assert events[0].attempts == 3  # 1 try + 2 retries
-    assert isinstance(events[0].error, ValueError)
-    assert events[0].report is None
-    assert loader.manifest().count() == 0  # nothing recorded
+        loader.run("f", ["a.parquet"], boom)
+    assert loader.manifest().count() == 0
+    fresh = IncrementalLoader(spark, str(tmp_path / "manifest"))
+    assert fresh.new_files("f", ["a.parquet"]) == ["a.parquet"]
 
-    # the failed batch is still "new" — a fixed process picks it up
-    r = loader.run("f", ["a.parquet"], lambda fs: None)
-    assert r.new_files == ["a.parquet"]
-
-
-def test_run_success_hook_on_empty_batch(spark, tmp_path):
-    """No new files → process never runs (attempts=0) but the success
-    hook still fires with the zero-work report, so a scheduler can
-    distinguish 'ran, nothing to do' from 'never ran'."""
-    loader = IncrementalLoader(spark, str(tmp_path / "manifest"))
-    loader.run("f", ["a.parquet"], lambda fs: None)
-
-    events = []
-    r = loader.run(
-        "f", ["a.parquet"], lambda fs: None, on_success=events.append
-    )
-    assert r.new_files == [] and r.skipped == 1
-    assert len(events) == 1
-    assert events[0].status == "success" and events[0].attempts == 0
+    processed: list[list[str]] = []
+    r = loader.run("f", ["a.parquet"], processed.append)
+    assert r.new_files == ["a.parquet"] and processed == [["a.parquet"]]
+    assert loader.manifest().count() == 1

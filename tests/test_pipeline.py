@@ -147,6 +147,50 @@ def test_pipeline_inline_audits(spark, tmp_path):
     by_check = {
         (r.check, r.column): r.violations for r in rep.audits["t"]
     }
-    assert by_check[("not_null", "id")] >= 1
-    assert by_check[("unique", "id")] >= 1
+    assert by_check[("not_null", "id")] == 1
+    assert by_check[("unique", "id")] == 1
     assert not rep.audits_passed
+
+
+def test_pipeline_failing_source_keeps_earlier_sources(spark, tmp_path):
+    """A corrupt Parquet drop fails the run after the CSV source has
+    landed: the CSV file stays in staging and in the manifest, the corrupt
+    file is not recorded, and once it is replaced the next run loads only
+    that file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    _write(tmp_path / "raw" / "call_logs" / "day1.csv", CSV_DAY1)
+    usage = tmp_path / "raw" / "usage" / "day1.parquet"
+    _write(usage, "not a parquet file")
+    base = _config(tmp_path)
+    cfg = PipelineConfig(
+        sources=[
+            base.sources[0],
+            SourceConfig(
+                name="usage", fmt="parquet", raw_dir=str(usage.parent)
+            ),
+        ],
+        staging_dir=base.staging_dir,
+        manifest_path=base.manifest_path,
+    )
+
+    with pytest.raises(Exception, match="is not a Parquet file"):
+        run_pipeline(spark, cfg)
+    manifest = spark.read.parquet(cfg.manifest_path).collect()
+    assert [(r.folder_name, r.file_name) for r in manifest] == [
+        ("call_logs", "day1.csv")
+    ]
+    staging = tmp_path / "staging"
+    assert spark.read.parquet(str(staging / "call_logs")).count() == 2
+
+    usage.unlink()
+    pq.write_table(
+        pa.table({"customer_id": [10, 11], "minutes": [3.5, 7.0]}), str(usage)
+    )
+    r = run_pipeline(spark, cfg)
+    assert r.loads["call_logs"].new_files == []
+    assert r.loads["usage"].new_files == ["day1.parquet"]
+    assert spark.read.parquet(str(staging / "call_logs")).count() == 2
+    assert spark.read.parquet(str(staging / "usage")).count() == 2
