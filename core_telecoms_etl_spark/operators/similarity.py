@@ -136,7 +136,7 @@ def brute_force_topk(
     """Exact cosine top-k per query vector — Arrow-batched scorer by
     DEFAULT since r9: the interpreted HOF fold costs ~270 ns per
     64-dim pair and the gap vs the Arrow path grows with corpus size
-    (tools/dot_scorer_probe.py: 1.2× at 0.2M pairs, 3.9× at 12.8M,
+    (measured, 100 queries × 64 dims: 1.2× at 0.2M pairs, 3.9× at 12.8M,
     widening — the fold never codegens, so at 100 TB the scoring join
     would be interpreter-bound). Output is BIT-IDENTICAL to the
     declarative fold path (`brute_force_topk_fold`, kept as the
@@ -394,8 +394,8 @@ def brute_force_topk_arrow_rounded6(
     tests/test_similarity.py). This closes the last interpreted Q·N
     fold path (VERDICT r9 ask #2: knn_classify's exact arm scored
     ~19M pairs through the interpreted HOF fold at sf0.1, past the
-    12.8M-pair point where tools/dot_scorer_probe.py measured the
-    fold 3.9× slower than Arrow and widening).
+    12.8M-pair point where the fold measured 3.9× slower than Arrow
+    and widening).
 
     Bit-equality discipline — the one new wrinkle vs
     `brute_force_topk_arrow` is the 6-decimal ROUNDING, whose
@@ -1135,17 +1135,6 @@ def _sketch_expr(vec_col: str, n_bits: int, seed: int) -> Column:
     return sketch
 
 
-def random_hyperplane_sketch(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    n_bits: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Adds the sign-bit LSH `sketch` (long) column — see `_sketch_expr`."""
-    return df.withColumn("sketch", _sketch_expr(vec_col, n_bits, seed))
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1533,7 +1522,7 @@ def kmeans_centroids(
     wide-agg form measured ~1.0 s/iter of extra codegen+decimal
     machinery at dim=64; the explode form is plan-size-independent of
     dim and measured ~0.1 s over the scan floor). Measured on the
-    10⁶×64-dim probe (tools/kmeans_probe.py): ~1.9 s/iter warm vs the
+    10⁶×64-dim synthetic corpus: ~1.9 s/iter warm vs the
     fold reference's 40.7 s/iter (r11 verdict row: 26.8 s/iter) —
     the scan is the whole cost, as it should be."""
     import math

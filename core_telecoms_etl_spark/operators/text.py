@@ -281,8 +281,8 @@ def quality_quantile_filter(
     unavoidable for a corpus-relative cut. `exact=True` keeps memory
     proportional to DISTINCT score values (fine for ratio-valued scores);
     at 100 TB with high-cardinality scores switch `exact=False` →
-    `approx_percentile` (t-digest, mergeable, bounded memory, rows-only
-    vs an oracle).
+    `approx_percentile` (t-digest, mergeable, bounded memory, not
+    exactly comparable with an oracle).
 
     Boundary safety for exact-oracle comparison: an interpolated
     threshold lies strictly between two ADJACENT sorted data values, so

@@ -1774,7 +1774,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cross-engine determinism argument); top-25 by (rank, node) via
     TakeOrderedAndProject. The ORACLE unrolls the identical recurrence
     as 5 chained CTEs — a genuinely iterative algorithm under the full
-    typed-hash gate, not a rows-only check."""
+    exact-value oracle check."""
     from core_telecoms_etl_spark.operators.graph import pagerank
 
     edges, nodes = _copurchase_graph(spark, sf_dir)

@@ -1,7 +1,7 @@
 """Vector-similarity queries on the `embeddings` table (SURVEY.md §2.13
 X3 + north-star ANN). Brute-force cosine is the oracle-checked baseline;
-IVF and sign-bit LSH are the approximate scale paths (rows-only checks,
-recall-tested against brute force in pytest).
+IVF and sign-bit LSH are the approximate scale paths (recall-tested
+against brute force in pytest).
 
 Float determinism: cosine = dot/sqrt(n²a·n²b) where dot and the norms are
 rounded at 1e-6 BEFORE the division, so both engines divide bit-identical

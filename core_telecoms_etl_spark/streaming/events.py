@@ -309,7 +309,7 @@ def first_state_bound_violation(q, max_state_rows: int):
     this scan with `_StateBoundListener`, which observes EVERY
     progress event through the listener bus with no retention bound —
     this function remains the dependency-free post-hoc check for
-    replayed histories (tools/stream_state_probe.py)."""
+    replayed histories."""
     for p in q.recentProgress:
         for so in p.get("stateOperators") or []:
             total = int(so.get("numRowsTotal") or 0)
@@ -597,8 +597,7 @@ def run_stream_stream_join(
     the watermark is sized to real lateness — a missing or
     decade-wide watermark marches join state with stream LIFETIME
     (both buffered sides never evict; measured marching to the full
-    delivered row count on the sf10 churn corpus,
-    tools/stream_state_probe.py MODE=interval). The cap checks
+    delivered row count on the sf10 churn corpus). The cap checks
     numRowsTotal per micro-batch through the same
     listener+sampler+scan triple and raises at the earliest over-cap
     batch naming the watermark as the escalation path.
@@ -680,66 +679,6 @@ def run_stream_stream_join(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     guard.check(q)
-    return spark.table(query_name)
-
-
-def run_stream_windowed_append(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    width: str = "15 minutes",
-    watermark: str = "30 minutes",
-    max_files_per_trigger: int = 1,
-    query_name: str = "stream_append_out",
-) -> DataFrame:
-    """Watermarked tumbling aggregation in APPEND mode over a directory of
-    event files: each file is a micro-batch (maxFilesPerTrigger=1), the
-    watermark advances between batches, and only windows fully below the
-    watermark are emitted — the late-data policy a production stream needs
-    (late rows beyond the watermark are dropped, not silently wrong).
-
-    Returns the emitted (closed) windows. On a cluster the sink is a
-    parquet/Delta append with checkpointing; the memory sink here is the
-    local harness shape."""
-    from core_telecoms_etl_spark.sources.readers import (
-        ensure_session_confs,
-        normalize_timestamps,
-    )
-
-    # nanos opt-in: events_dir is the harness events table (nanos `ts`,
-    # rewritten back to timestamp below via normalize_timestamps)
-    ensure_session_confs(spark, nanos_as_long=True)
-    raw_schema = spark.read.parquet(events_dir).schema
-    stream = normalize_timestamps(
-        spark.readStream.format("parquet")
-        .schema(raw_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(events_dir),
-        nanos_bigint_cols=("ts",),
-    ).withWatermark("ts", watermark)
-    agg = (
-        stream.groupBy(F.window("ts", width), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("value_sum"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "value_sum",
-        )
-    )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(query_name)
 
 

@@ -1,6 +1,6 @@
 """Dedup-family tests (SURVEY.md §2.13 X1/X2): exact, Jaccard, MinHash,
 SimHash — including the estimator-vs-exact consistency checks the
-rows-only declared queries rely on."""
+approximate declared queries rely on."""
 
 from __future__ import annotations
 

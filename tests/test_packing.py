@@ -108,7 +108,10 @@ def test_pack_sequences_raises_on_negative_token_count(spark):
     requires non-negative token counts; the contract is enforced per
     row — a negative count raises instead of silently mispacking
     (ADVICE r15)."""
+    import re
+
     import pytest
+    from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
 
     d = spark.range(50).select(
@@ -118,8 +121,20 @@ def test_pack_sequences_raises_on_negative_token_count(spark):
         .cast("long")
         .alias("n_tokens"),
     )
-    with pytest.raises(SparkRuntimeException, match="negative n_tokens"):
+    with pytest.raises((SparkRuntimeException, Py4JJavaError)) as info:
         pack_sequences(d, "doc_id", "n_tokens", budget=64).collect()
+    if isinstance(info.value, SparkRuntimeException):
+        failures = [str(info.value)]
+    else:
+        # two AQE stages can hit the contract at the same moment; Spark
+        # then lists every failure in one SparkException, which PySpark
+        # does not convert
+        je = info.value.java_exception
+        assert je.getCondition() == "STAGE_MATERIALIZATION_MULTIPLE_FAILURES", je
+        params = je.getMessageParameters()
+        failures = re.split(r"\n  \d+\. ", params.get("failureDetails"))[1:]
+        assert len(failures) == int(params.get("failureCount")), failures
+    assert all("negative n_tokens" in f for f in failures), failures
 
 
 def test_pack_sequences_null_counts_still_skipped(spark):

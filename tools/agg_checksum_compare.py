@@ -54,14 +54,9 @@ import os
 import sys
 import time
 
-import duckdb
+from check_oracle import connect
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 REL_TOL = 1e-9
 
@@ -330,17 +325,7 @@ def main() -> int:
         extra_conf={"spark.cleaner.periodicGC.interval": "2min"},
     )
     qs, oracles = qmod.queries(), qmod.oracle_sql()
-    con = duckdb.connect(
-        config={
-            "memory_limit": "48GB",
-            "temp_directory": "/tmp/duckdb_spill",
-        }
-    )
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(p):
-            p = f"{p}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = connect(sf_dir)
 
     args = sys.argv[1:]
     invariant_mode = "--invariants" in args

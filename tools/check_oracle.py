@@ -1,6 +1,7 @@
-"""Local replica of the driver's correctness harness: runs each declared
-query on Spark AND its DuckDB oracle at sf0.01, then compares row count,
-sorted column names, and exact values (stricter than the driver's hash).
+"""Oracle differential: runs each declared query on Spark AND its DuckDB
+oracle, then compares row count, sorted column names, dtype families and
+exact values. Tier-1 runs every query through `sweep` at sf0.001 and
+sf0.01 (tests/test_entry.py); this CLI runs it at any other scale.
 
 Usage: python tools/check_oracle.py [--jobs N] [query ...]  (default: all, 4 threads)
        SF_DIR=/root/testdata/sf0.01 python tools/check_oracle.py
@@ -10,8 +11,10 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
 import time
 import traceback
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import numpy as np
@@ -103,37 +106,93 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
     return problems
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per `TABLES` entry over sf_dir.
+    Connections are not thread-safe: each sweep thread opens its own."""
+    # bounded memory + disk spill: an unbounded in-process DuckDB got
+    # OOM-killed at 107 GB RSS on the sf10 triangle-count oracle (r12
+    # decade sweep) — the oracle must SPILL at decade scales, same as
+    # Spark does
+    con = duckdb.connect(
+        config={"memory_limit": "48GB", "temp_directory": "/tmp/duckdb_spill"}
+    )
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        # Spark-written tables are directories of part files (e.g. the
+        # 8× scale replica) — glob them for DuckDB
+        if os.path.isdir(p):
+            p = f"{p}/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
 def _check_one(name, qs, oracles, spark, sf_dir, con_factory):
-    """Run one query + its oracle; returns (name, status, lines).
-    status: "pass" | "fail" | "rows-only"."""
+    """Run one query + its oracle; returns (name, passed, lines)."""
     t0 = time.time()
     try:
         sdf = qs[name](spark, sf_dir).toPandas()
     except Exception:
-        return name, "fail", [
+        return name, False, [
             f"FAIL {name}: spark side raised",
             traceback.format_exc(limit=5),
         ]
     dt = time.time() - t0
-    if name not in oracles:
-        return name, "rows-only", [
-            f"OK?  {name}: {len(sdf)} rows [rows-only] ({dt:.1f}s)"
-        ]
     try:
         odf = con_factory().execute(oracles[name]).df()
     except Exception as e:
-        return name, "fail", [f"FAIL {name}: oracle SQL raised: {e}"]
+        return name, False, [f"FAIL {name}: oracle SQL raised: {e}"]
     problems = compare(name, sdf, odf)
     if problems:
         lines = [
             f"FAIL {name}: ({len(sdf)} spark rows, {len(odf)} oracle rows)"
         ] + [f"     {p}" for p in problems]
-        return name, "fail", lines
+        return name, False, lines
     # an empty result matches its oracle trivially — flag it so a
     # too-restrictive literal (wrong region name, impossible filter)
     # can't hide behind a green row
     empty = " [EMPTY RESULT — weak signal]" if len(sdf) == 0 else ""
-    return name, "pass", [f"PASS {name}: {len(sdf)} rows ({dt:.1f}s){empty}"]
+    return name, True, [f"PASS {name}: {len(sdf)} rows ({dt:.1f}s){empty}"]
+
+
+def sweep(spark, sf_dir: str, names, jobs: int = 4):
+    """Check each of `names` against its oracle on `jobs` threads;
+    yields `_check_one`'s (name, passed, lines) in `names` order."""
+    from core_telecoms_etl_spark import queries as qmod
+
+    qs, oracles = qmod.queries(), qmod.oracle_sql()
+    tls = threading.local()
+    cons = []
+
+    def con_factory():
+        if getattr(tls, "con", None) is None:
+            tls.con = connect(sf_dir)
+            cons.append(tls.con)
+        return tls.con
+
+    # Spark supports concurrent actions from multiple threads on one
+    # session; queries sharing a cache_scoped slot may evict each other
+    # mid-flight, which only costs recompute (all plans are
+    # deterministic), never correctness.
+    # SHARED-VIEW INVARIANT: a handful of queries register temp views
+    # under the bare table names (sql_api, exists_subquery,
+    # scalar_subquery, recursive_hierarchy_walk via
+    # createOrReplaceTempView; catalog.register_views). Running them
+    # concurrently on one session is safe ONLY because every such
+    # registration is the full, unfiltered load_table(sf_dir, t) for
+    # the same sf_dir — re-registration is idempotent, so interleaving
+    # cannot change what any query reads. A future query that registers
+    # a FILTERED or derived frame under a shared table name would race
+    # nondeterministically here: give such views a query-unique name
+    # (e.g. "__myquery_orders") instead.
+    try:
+        with ThreadPoolExecutor(max_workers=max(1, jobs)) as ex:
+            yield from ex.map(
+                lambda n: _check_one(n, qs, oracles, spark, sf_dir, con_factory),
+                names,
+            )
+    finally:
+        for con in cons:
+            con.close()
 
 
 def main() -> int:
@@ -161,35 +220,6 @@ def main() -> int:
         },
     )
     qs = qmod.queries()
-    oracles = qmod.oracle_sql()
-
-    # one DuckDB connection per worker thread (connections are not
-    # thread-safe); views are cheap to re-create per connection
-    import threading
-
-    tls = threading.local()
-
-    def con_factory():
-        if getattr(tls, "con", None) is None:
-            # bounded memory + disk spill: an unbounded in-process
-            # DuckDB got OOM-killed at 107 GB RSS on the sf10
-            # triangle-count oracle (r12 decade sweep) — the oracle
-            # must SPILL at decade scales, same as Spark does
-            c = duckdb.connect(
-                config={
-                    "memory_limit": "48GB",
-                    "temp_directory": "/tmp/duckdb_spill",
-                }
-            )
-            for t in TABLES:
-                p = f"{sf_dir}/{t}.parquet"
-                # Spark-written tables are directories of part files
-                # (e.g. the 8× scale replica) — glob them for DuckDB
-                if os.path.isdir(p):
-                    p = f"{p}/*.parquet"
-                c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-            tls.con = c
-        return tls.con
 
     argv = sys.argv[1:]
     jobs = int(os.environ.get("CHECK_ORACLE_JOBS", "4"))
@@ -203,42 +233,15 @@ def main() -> int:
         print(f"?? {n}: no such query")
     wanted = [n for n in wanted if n in qs]
 
-    n_pass = n_fail = n_rows_only = len(unknown) and 0
-    n_fail = len(unknown)
-    # Spark supports concurrent actions from multiple threads on one
-    # session; queries sharing a cache_scoped slot may evict each other
-    # mid-flight, which only costs recompute (all plans are
-    # deterministic), never correctness.
-    # SHARED-VIEW INVARIANT: a handful of queries register temp views
-    # under the bare table names (sql_api, exists_subquery,
-    # scalar_subquery, recursive_hierarchy_walk via
-    # createOrReplaceTempView; catalog.register_views). Running them
-    # concurrently on one session is safe ONLY because every such
-    # registration is the full, unfiltered load_table(sf_dir, t) for
-    # the same sf_dir — re-registration is idempotent, so interleaving
-    # cannot change what any query reads. A future query that registers
-    # a FILTERED or derived frame under a shared table name would race
-    # nondeterministically here: give such views a query-unique name
-    # (e.g. "__myquery_orders") instead.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=max(1, jobs)) as ex:
-        for name, status, lines in ex.map(
-            lambda n: _check_one(n, qs, oracles, spark, sf_dir, con_factory),
-            wanted,
-        ):
-            for ln in lines:
-                print(ln)
-            if status == "pass":
-                n_pass += 1
-            elif status == "rows-only":
-                n_rows_only += 1
-            else:
-                n_fail += 1
-    print(
-        f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only "
-        f"of {len(wanted) + len(unknown)} queries"
-    )
+    n_pass, n_fail = 0, len(unknown)
+    for _name, passed, lines in sweep(spark, sf_dir, wanted, jobs):
+        for ln in lines:
+            print(ln)
+        if passed:
+            n_pass += 1
+        else:
+            n_fail += 1
+    print(f"\n{n_pass} pass, {n_fail} fail of {len(wanted) + len(unknown)} queries")
     return 1 if n_fail else 0
 
 

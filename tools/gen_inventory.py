@@ -1,8 +1,6 @@
 """Generate QUERIES.md — the authoritative declared-query inventory:
-name, defining module, oracle kind, first docstring line, and the
-LAST-GREEN DRIVER ROUND of each query (scanned from CORRECTNESS_r*.json
-— the VERDICT r6 staleness-self-audit ask). Run after adding queries so
-SURVEY.md §2's checklist, the registry, and window staleness can be
+name, defining module and first docstring line of each query. Run after
+adding queries so SURVEY.md §2's checklist and the registry can be
 cross-checked mechanically.
 
 Usage: python tools/gen_inventory.py
@@ -10,10 +8,7 @@ Usage: python tools/gen_inventory.py
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -21,94 +16,32 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def last_green_rounds() -> dict[str, int]:
-    """query -> highest round whose driver CORRECTNESS row was green.
-
-    Green = rows/schema match and the value hash matched (rows-only
-    checks have hash_match null/absent — rows+schema suffice there,
-    mirroring the driver's weaker gate)."""
-    out: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.load(open(path))
-        except Exception:
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err"):
-                continue
-            if not (row.get("rows_match") and row.get("schema_match")):
-                continue
-            if row.get("hash_match") is False:
-                continue
-            out[name] = max(out.get(name, 0), rnd)
-    return out
-
-
 def main() -> None:
     from core_telecoms_etl_spark import queries as qmod
 
     qmod._load_all()  # noqa: SLF001
-    green = last_green_rounds()
-    order = {n: i for i, n in enumerate(qmod._CHECK_ORDER)}  # noqa: SLF001
     rows = []
     for name, spec in sorted(qmod.REGISTRY.items()):
         fn = spec.fn
         doc = (fn.__doc__ or "").strip().splitlines()
         first = doc[0].strip() if doc else ""
         module = fn.__module__.rsplit(".", 1)[-1]
-        kind = "full oracle" if spec.oracle else "rows-only"
-        lg = green.get(name)
-        slot = order.get(name, -1)
-        rows.append((name, module, kind, lg, slot, first))
-    n_full = sum(1 for r in rows if r[2] == "full oracle")
-    n_green = sum(1 for r in rows if r[3])
-    latest = max((r[3] for r in rows if r[3]), default=0)
-    # staleness bar matches tests/test_entry.py::test_window_head_rotation:
-    # a query is stale when its last green is more than 4 rounds old —
-    # 207 queries at 50 window slots need ceil(207/50) = 5 rounds for a
-    # full rotation, so <= latest-4 is "due in the NEXT window" and
-    # <= latest-5 (what the test enforces) is a violation
-    stale = sorted(
-        (r[0], r[3]) for r in rows if r[3] and r[3] <= latest - 4
-    )
-    never = sorted(r[0] for r in rows if not r[3])
+        rows.append((name, module, first))
     out = [
         "# QUERIES — declared query inventory (generated)\n",
-        f"Generated by `tools/gen_inventory.py`. {len(rows)} queries, "
-        f"{n_full} with full DuckDB value-oracles, "
-        f"{len(rows) - n_full} rows-only (engine-specific hashes / "
-        "approximate algorithms, each equivalence- or recall-tested in "
-        "pytest).\n",
-        f"Driver history: {n_green}/{len(rows)} ever-green across "
-        f"CORRECTNESS_r01..r{latest:02d}; 'green' column = last round "
-        "the driver's own gate passed the query (the first 50 slots of "
-        "the check order form each round's driver window). "
-        f"Never driver-sampled yet: "
-        f"{', '.join('`%s`' % n for n in never) if never else 'none'}. "
-        f"Stale (last green ≤ r{latest - 4}, due in the next window): "
-        f"{', '.join('`%s`(r%d)' % s for s in stale) if stale else 'none'}.\n",
-        "| query | module | check | green | slot | summary |",
-        "|---|---|---|---|---|---|",
+        f"Generated by `tools/gen_inventory.py`. {len(rows)} queries, each "
+        "checked against its DuckDB oracle on every tier-1 run "
+        "(`tests/test_entry.py::test_every_query_matches_its_oracle`, "
+        "sf0.001 and sf0.01).\n",
+        "| query | module | summary |",
+        "|---|---|---|",
     ]
-    for name, module, kind, lg, slot, first in rows:
-        g = f"r{lg}" if lg else "—"
-        out.append(
-            f"| `{name}` | {module} | {kind} | {g} | {slot} | {first} |"
-        )
+    for name, module, first in rows:
+        out.append(f"| `{name}` | {module} | {first} |")
     path = os.path.join(REPO, "QUERIES.md")
     with open(path, "w") as f:
         f.write("\n".join(out) + "\n")
-    print(
-        f"wrote {path}: {len(rows)} queries ({n_full} full-oracle, "
-        f"{n_green} ever-green, {len(never)} never-sampled, "
-        f"{len(stale)} stale)"
-    )
+    print(f"wrote {path}: {len(rows)} queries")
 
 
 if __name__ == "__main__":
